@@ -2,10 +2,10 @@
 
 ``run.py`` builds the inputs and then starts this file with a plan. The
 client sets up a session, then issues the workload's operations one at
-a time, the next only after the previous returned, until ``seconds``
-have passed (always finishing the pass it is in). Output checks happen
-in ``run.py`` after this process has ended; this process only records
-what the program returned.
+a time, the next only after the previous returned, in passes (see
+``measure``). It records the wall and CPU time of every operation.
+Output checks happen in ``run.py`` after this process has ended; this
+process only records what the program returned.
 
 Usage: python3 perfbench/client.py PLAN.json
 """
@@ -89,57 +89,74 @@ def main(plan_path: str) -> int:
     records: list[dict] = []  # one per operation, measured or warm-up
     frames: dict[int, object] = {}
 
-    def catalog_op(name: str, sf_dir: str, kind: str) -> None:
+    def timed(rec: dict, call) -> None:
+        """Run one operation; record its wall time and the CPU time of
+        the process tree while it ran."""
+        cpu0 = tracing.cpu_split(os.getpid())["total"]
+        t = time.perf_counter()
+        try:
+            call()
+        except Exception:  # the run goes on; run.py counts it as failed
+            rec["error"] = traceback.format_exc(limit=3)
+        rec["latency_s"] = time.perf_counter() - t
+        rec["cpu_s"] = tracing.cpu_split(os.getpid())["total"] - cpu0
+        records.append(rec)
+
+    def catalog_op(name: str, sf_dir: str, kind: str, pos: int | None = None) -> None:
         from flight_delay_prediction_using_pyspark_spark.plans import QUERIES
 
         fn = QUERIES[name]
-        rec = {"name": name, "kind": kind, "family": FAMILY.get(fn.__module__.rsplit(".", 1)[1], "other")}
+        rec = {"name": name, "kind": kind, "pos": pos,
+               "family": FAMILY.get(fn.__module__.rsplit(".", 1)[1], "other")}
         df = None
-        t = time.perf_counter()
-        with span(name, kind=kind) as op:
-            try:
+
+        def call() -> None:
+            nonlocal df
+            with span(name, kind=kind) as op:
+                rec["span"] = op.get("id")
                 with span("plans.build"):
                     df = fn(spark, sf_dir)
                 with span("plans.collect"):
                     frames[len(records)] = df.toPandas()
-            except Exception:  # the run goes on; run.py counts it as failed
-                rec["error"] = traceback.format_exc(limit=3)
-        rec["latency_s"] = time.perf_counter() - t
+
+        timed(rec, call)
         if tr:
-            rec["span"] = op["id"]
-            tr.after_op(op, df if "error" not in rec else None)
-        records.append(rec)
+            tr.after_op(tr.spans[rec["span"]], df if "error" not in rec else None)
 
     def cli_op(k: int) -> None:
         from flight_delay_prediction_using_pyspark_spark.app import cli
 
         fl = plan["flights"]
         out_dir = os.path.join(fl["out_root"], f"job{k}")
-        rec = {"name": "cli.run", "kind": "op", "family": "cli", "out_dir": out_dir}
+        rec = {"name": "cli.run", "kind": "op", "pos": 0, "family": "cli", "out_dir": out_dir}
         argv = [fl["train"], out_dir, "--plane-data", fl["plane"], "--test-file", fl["test"]]
-        t = time.perf_counter()
-        with span("cli.run", kind="op") as op:
-            try:
+
+        def call() -> None:
+            with span("cli.run", kind="op") as op:
+                rec["span"] = op.get("id")
                 rec["result"] = cli.run(argv)
-            except Exception:
-                rec["error"] = traceback.format_exc(limit=3)
-        rec["latency_s"] = time.perf_counter() - t
+
+        timed(rec, call)
         if tr:
-            rec["span"] = op["id"]
-            tr.after_op(op)
-        records.append(rec)
+            tr.after_op(tr.spans[rec["span"]])
 
     def measure() -> tuple[float, float, list[dict]]:
-        """Warm-up, then measured passes until ``seconds`` have passed.
+        """Warm-up, then measured passes until ``seconds`` have passed
+        and at least ``min_passes`` have run, but never more than
+        ``max_passes``.
 
-        The warm-up queries run once, untimed, so that the first jobs'
-        class loading and JIT are paid in set-up. Each measured pass
-        reads the inputs through its own path, so the program's
-        per-input memo caches start cold on every pass."""
+        The warm-up runs untimed, so that class loading, the pyspark
+        Python workers and the first JIT compilations are paid in
+        set-up. Only the catalog workloads warm up, with one pass of
+        their queries; ``flights_ml`` is one cold CLI job, as users run
+        it.
+
+        Each measured pass reads the inputs through its own path, so the
+        program's per-input memo caches start cold on every pass."""
         t = time.perf_counter()
-        if plan["warmup"]:
-            with span("session.warmup"):
-                for name in plan["warmup"]:
+        with span("session.warmup"):
+            if workload != "flights_ml":
+                for name in plan["ops"]:
                     catalog_op(name, plan["sf_dir"], "warmup")
         warmup_s = time.perf_counter() - t
         setup_s = time.time() - plan["spawned_at"]
@@ -147,7 +164,9 @@ def main(plan_path: str) -> int:
             tr.start_measuring()
         passes = []
         first = time.perf_counter()
-        while not passes or time.perf_counter() - first < plan["seconds"]:
+        while len(passes) < plan["min_passes"] or (
+            time.perf_counter() - first < plan["seconds"] and len(passes) < plan["max_passes"]
+        ):
             k = len(passes)
             cpu0 = tracing.cpu_split(os.getpid())
             t = time.perf_counter()
@@ -157,8 +176,8 @@ def main(plan_path: str) -> int:
             else:
                 sf_dir = f"{plan['sf_dir']}-pass{k}"
                 os.symlink(plan["sf_dir"], sf_dir)
-                for name in plan["ops"]:
-                    catalog_op(name, sf_dir, "op")
+                for j, name in enumerate(plan["ops"]):
+                    catalog_op(name, sf_dir, "op", j)
             cpu1 = tracing.cpu_split(os.getpid())
             passes.append({
                 "wall_s": time.perf_counter() - t,
