@@ -90,21 +90,11 @@ def numeric_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
 def exact_quantiles(df: DataFrame, col: str, probs: Sequence[float]) -> DataFrame:
     """Exact interpolated percentiles (A6 exact form). For 100 TB use
-    `approx_quantiles` (GK sketch) instead; exact percentile sorts the
-    column within groups."""
+    F.percentile_approx (GK sketch, single pass, mergeable across
+    partitions) instead; exact percentile sorts the column within
+    groups."""
     cols = [
         F.expr(f"percentile({col}, {p})").alias(f"p{int(p * 100):02d}") for p in probs
-    ]
-    return df.agg(*cols)
-
-
-def approx_quantiles(df: DataFrame, col: str, probs: Sequence[float], accuracy: int = 10000) -> DataFrame:
-    """Greenwald-Khanna sketch percentiles (A6,
-    /root/reference/src/main/helper_methods.py:70) — single pass,
-    mergeable across partitions; the scale path."""
-    cols = [
-        F.percentile_approx(F.col(col), p, accuracy).alias(f"p{int(p * 100):02d}_approx")
-        for p in probs
     ]
     return df.agg(*cols)
 

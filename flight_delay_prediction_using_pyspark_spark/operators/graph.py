@@ -49,14 +49,17 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     a < b.
 
     The edge list and the degree frame are persisted for the duration
-    of the computation: `edges` has FIVE consumers here (two degree
-    scans, the orientation join, the wedge-close semi-join via `e`,
-    and the n_edges count), and without the persist each one re-runs
-    the caller's full edge-derivation lineage — for co-purchase
-    graphs that is the per-order pair-generation shuffle, five times.
-    All outputs are materialized eagerly so the caches can be released
-    before returning; the returned one-row frame is built from
-    literals."""
+    of the computation: `edges` has FOUR consumers here (two degree
+    scans, the orientation join, and the wedge-close semi-join via
+    `e`; n_edges comes off the degree aggregate), and without the
+    persist each one re-runs the caller's full edge-derivation
+    lineage — for co-purchase graphs that is the per-order
+    pair-generation shuffle, four times. All outputs are materialized
+    eagerly so the caches can be released before returning; the
+    returned one-row frame is built from literals. On an empty edge
+    frame n_nodes, n_edges and n_triangles are 0 while n_wedges and
+    the clustering coefficient are NULL — the SQL oracle's values,
+    whose n_edges is a COUNT and n_wedges a SUM over no rows."""
     # Respect a caller-managed cache: if `edges` is already persisted
     # (e.g. the catalog's shared co-purchase edge cache), do not
     # re-persist and — critically — do not unpersist it on exit
@@ -64,7 +67,7 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     # caller's entry too).
     # Inspect the StorageLevel fields, not its repr (the repr format is
     # not a stable API across PySpark versions; a silent mismatch would
-    # leave the five-consumer edge frame unpersisted — round-4 advice).
+    # leave the four-consumer edge frame unpersisted).
     sl = edges.storageLevel
     manage = not (sl.useMemory or sl.useDisk or sl.useOffHeap)
     if manage:
@@ -118,7 +121,7 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     # degree agg hides entirely under the wedge join instead of
     # queueing behind it. The concurrent consumers race to fill the
     # deg/edges caches; the block-level get-or-compute computes each
-    # block once. Round-14: 3 sequential jobs → 2 overlapped,
+    # block once. Measured: 3 sequential jobs → 2 overlapped took
     # 3.40 → 2.9 s warm at sf0.1, outputs bit-identical.
     from flight_delay_prediction_using_pyspark_spark.plans.queries import (
         run_concurrently,
@@ -131,7 +134,7 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
             F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
             .cast("bigint")
             .alias("n_wedges"),
-            F.expr("sum(deg) div 2").alias("n_edges"),
+            F.expr("coalesce(sum(deg) div 2, 0)").alias("n_edges"),
         ).first(),
     )
     n_edges = drow["n_edges"]
@@ -145,7 +148,13 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
         F.lit(n_edges).cast("bigint").alias("n_edges"),
         F.lit(drow["n_wedges"]).cast("bigint").alias("n_wedges"),
         F.lit(n_tri).cast("bigint").alias("n_triangles"),
-        F.round(F.lit(3.0) * n_tri / F.lit(drow["n_wedges"]), 6).alias("clustering"),
+        # NULL without wedges, as SQL's x / 0 gives; ANSI mode would
+        # raise on the division instead
+        (
+            F.round(F.lit(3.0) * n_tri / F.lit(drow["n_wedges"]), 6)
+            if drow["n_wedges"]
+            else F.lit(None).cast("double")
+        ).alias("clustering"),
     )
 
 
@@ -243,22 +252,24 @@ def kcore_peel(
     first checkpoint write is not a handful of giant tasks. Results
     are partition-independent (exact counts).
 
-    Scale shape (round-4 rewrite): the graph is held SYMMETRIZED
-    (each undirected edge as two directed rows), so a node's degree is
-    a plain window count over `src` — peeling a round is two window
-    counts and a filter, fused with the survivor-count aggregate into
-    ONE job per round. The previous broadcast-semi-join formulation
-    launched two broadcast builds plus a degree job per round (2.4x
-    slower on the co-purchase bench graph) and assumed the survivor
-    node SET fits in a driver broadcast — false for billion-node
-    graphs, while the window shuffle partitions by node id with no
-    size assumption (a pathological super-node key is a salting
-    problem, not a capacity wall). The shrinking frame is persisted
-    per round and the predecessor unpersisted after its successor
-    materializes, keeping lineage O(1) deep."""
+    Scale shape: the graph is held SYMMETRIZED (each undirected edge
+    as two directed rows), so a node's degree is a plain window count
+    over `src` — peeling a round is two window counts and a filter,
+    one job per round. The window shuffle partitions by node id with
+    no size assumption (a broadcast-semi-join formulation would need
+    the survivor node SET in a driver broadcast — false for
+    billion-node graphs, and measured 2.4x slower on the co-purchase
+    bench graph). Each round's survivors are localCheckpointed, which
+    keeps lineage O(1) deep. All rounds peel on the calling thread;
+    the per-round survivor counts read only those checkpoints, so
+    they run afterwards as one run_concurrently batch — which also
+    raises the earliest failed count with the others attached as
+    notes."""
     from pyspark.sql import Window
 
-    from concurrent.futures import ThreadPoolExecutor
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import (
+        run_concurrently,
+    )
 
     sym = (
         edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -266,38 +277,32 @@ def kcore_peel(
         .repartition(partitions)
         .localCheckpoint()
     )
-    futures = []
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for r in range(1, rounds + 1):
-            deg_src = F.count(F.lit(1)).over(Window.partitionBy("src"))
-            deg_dst = F.count(F.lit(1)).over(Window.partitionBy("dst"))
-            # localCheckpoint, not persist: truncates the per-round
-            # lineage so round k's planning does not re-walk rounds
-            # 1..k-1 plus the caller's edge derivation (same rationale,
-            # measurement and durability note as pagerank_integer).
-            nxt = (
-                sym.withColumn("__ds", deg_src)
-                .withColumn("__dd", deg_dst)
-                .filter((F.col("__ds") >= k) & (F.col("__dd") >= k))
-                .select("src", "dst")
-                .localCheckpoint()
-            )
-            # The survivor-count aggregate reads the (already
-            # materialized) checkpoint, and round r+1 depends only on
-            # nxt — so the count runs on a driver thread while the
-            # main thread proceeds to the next round's peel (guide
-            # §2.6). Results are collected in round order below;
-            # nothing downstream reads them inside the loop.
-            futures.append(
-                pool.submit(
-                    nxt.agg(
-                        F.countDistinct("src").alias("n_nodes"),
-                        F.count(F.lit(1)).alias("n_dir_edges"),
-                    ).first
-                )
-            )
-            sym = nxt
+    survivors = []
+    for _ in range(rounds):
+        deg_src = F.count(F.lit(1)).over(Window.partitionBy("src"))
+        deg_dst = F.count(F.lit(1)).over(Window.partitionBy("dst"))
+        # localCheckpoint, not persist: truncates the per-round lineage
+        # so round k's planning does not re-walk rounds 1..k-1 plus the
+        # caller's edge derivation (same rationale, measurement and
+        # durability note as pagerank_integer).
+        sym = (
+            sym.withColumn("__ds", deg_src)
+            .withColumn("__dd", deg_dst)
+            .filter((F.col("__ds") >= k) & (F.col("__dd") >= k))
+            .select("src", "dst")
+            .localCheckpoint()
+        )
+        survivors.append(sym)
+    counts = run_concurrently(
+        *(
+            s.agg(
+                F.countDistinct("src").alias("n_nodes"),
+                F.count(F.lit(1)).alias("n_dir_edges"),
+            ).first
+            for s in survivors
+        )
+    )
     return [
         (r + 1, int(row["n_nodes"]), int(row["n_dir_edges"]) // 2)
-        for r, row in enumerate(f.result() for f in futures)
+        for r, row in enumerate(counts)
     ]

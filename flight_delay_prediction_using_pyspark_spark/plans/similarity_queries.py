@@ -21,6 +21,7 @@ from flight_delay_prediction_using_pyspark_spark.plans.queries import (
 )
 from flight_delay_prediction_using_pyspark_spark.similarity import ann
 from flight_delay_prediction_using_pyspark_spark.sources.readers import load_table
+from flight_delay_prediction_using_pyspark_spark.streaming.ops import stage_table
 
 _QUERY_VEC_ID = 0
 
@@ -234,39 +235,6 @@ def q_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return ann.knn_join(emb, queries, k=5)
-
-
-@query("ann_ivf_topk")
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-10 (similarity.ivf): MLlib KMeans coarse
-    quantizer (8 lists), 3-probe search, exact cosine rank within the
-    probed lists. Rows-only check — KMeans training is not
-    SQL-expressible; recall vs exact search is asserted in
-    tests/test_similarity.py."""
-    from flight_delay_prediction_using_pyspark_spark.similarity import ivf
-
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids, assigned = ivf.build_ivf_index(emb, n_lists=8)
-    top = ivf.ivf_search(
-        assigned, centroids, _query_vec(spark, sf_dir), k=10, n_probe=3
-    )
-    # self-check for the rows-only gate: exactly k (or fewer) rows, in
-    # non-increasing cosine order with valid [-1, 1] scores — the
-    # window reads the 10-row result, not the corpus.
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id")).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return top.select(
-        "vec_id",
-        "cosine",
-        (
-            (F.count(F.lit(1)).over(w) <= 10)
-            & (F.min("cosine").over(w) >= -1.0)
-            & (F.max("cosine").over(w) <= 1.0)
-        ).alias("contract_ok"),
-    )
 
 
 _INT8Q = (
@@ -774,9 +742,8 @@ def q_ann_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The clustering tier of the similarity stack: an oracle-replayable
 # Lloyd's trainer (exact-integer centroid state — see similarity/
 # kmeans.py for the determinism contract), the IVF coarse quantizer it
-# unlocks (the MLlib-trained ann_ivf_topk stays as the production-
-# parity rows-only sibling), and FAISS-style product quantization with
-# asymmetric-distance scoring (Jégou, Douze, Schmid, TPAMI 2011).
+# unlocks, and FAISS-style product quantization with asymmetric-distance
+# scoring (Jégou, Douze, Schmid, TPAMI 2011).
 
 from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
 
@@ -853,9 +820,11 @@ def q_embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cluster_id")
 
 
-@query(
-    "ann_ivf_kmeans_topk",
-    oracle=f"""
+def _ivf_topk_oracle(n_probe: int) -> str:
+    """DuckDB replay of _ivf_topk: the trainer bit-for-bit, then the
+    assignment CTE of one extra iteration as the final-assignment pass
+    under the trained centroids."""
+    return f"""
     WITH {km.kmeans_cte_sql(k=_KM_K, iters=_IVF_ITERS + 1, d=_KM_D)},
     probecent AS (SELECT cid, list_transform(s, x -> CAST(x AS DOUBLE) / n)
                   AS c FROM cent{_IVF_ITERS}),
@@ -863,7 +832,7 @@ def q_embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes AS (SELECT cid FROM (
         SELECT c.cid, {km._sq_dist_sql('qq.qv', 'c.c', _KM_D)} AS dist
         FROM probecent c CROSS JOIN qq)
-        ORDER BY dist, cid LIMIT {_IVF_PROBES}),
+        ORDER BY dist, cid LIMIT {n_probe}),
     cands AS (SELECT vid FROM b{_IVF_ITERS + 1}
               WHERE cid IN (SELECT cid FROM probes)),
     e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -872,24 +841,21 @@ def q_embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e JOIN cands ON e.vec_id = cands.vid CROSS JOIN qv0
     ORDER BY cosine DESC, vec_id
     LIMIT 10
-    """,
-)
-def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-10 with the DETERMINISTIC coarse quantizer: 8 lists
-    trained by similarity.kmeans (2 iterations), the 2 lists nearest
-    the query probed, exact cosine rank within them — the first
-    fully-oracle-backed IVF row (ann_ivf_topk, the MLlib-trained
-    sibling, stays rows-only because float KMeans centroids are
-    reduction-order-dependent).
+    """
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int) -> DataFrame:
+    """IVF top-10 with the deterministic coarse quantizer: 8 lists
+    trained by similarity.kmeans (2 iterations), the `n_probe` lists
+    nearest the query probed, exact cosine rank within them. Probing
+    all 8 lists is exact search.
 
     Scale shape: probe selection is driver-side over the k×d centroid
     artifact (bytes); assignment is a projection; with the corpus
     written partitionBy(list_id) the IN-filter prunes partitions at
     plan time, so a probe reads n_probe/n_lists of the data. The
     final rank is TakeOrderedAndProject over the probed lists — no
-    shuffle. The oracle replays the trainer bit-for-bit and reuses
-    iteration {_IVF_ITERS + 1}'s assignment CTE (b{_IVF_ITERS + 1})
-    as the final-assignment pass under cent{_IVF_ITERS}."""
+    shuffle."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_persist_if_large(
         emb.select(
@@ -909,11 +875,25 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     comps = {cid: km.centroid_components(n, s) for cid, (n, s) in cent.items()}
     probes = sorted(
         comps, key=lambda cid: (km.py_sq_dist(q_quant, comps[cid]), cid)
-    )[:_IVF_PROBES]
+    )[:n_probe]
     cands = base.withColumn("list_id", km.nearest_expr("qv", cent)).filter(
         F.col("list_id").isin(probes)
     )
     return ann.cosine_topk(cands, q_vec, k=10)
+
+
+@query("ann_ivf_topk", oracle=_ivf_topk_oracle(3))
+def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate top-10, 3 of 8 lists probed (see _ivf_topk);
+    recall against exact search is asserted in
+    tests/test_similarity.py."""
+    return _ivf_topk(spark, sf_dir, n_probe=3)
+
+
+@query("ann_ivf_kmeans_topk", oracle=_ivf_topk_oracle(_IVF_PROBES))
+def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF top-10, 2 of 8 lists probed (see _ivf_topk)."""
+    return _ivf_topk(spark, sf_dir, n_probe=_IVF_PROBES)
 
 
 @query(
@@ -1503,15 +1483,13 @@ def q_ann_ivf_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_IVF_ITERS + 1}'s CTE) without any streaming machinery —
     batch/stream symmetry, same contract as the events_streaming_*
     family."""
-    import os
     import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", km.quantize_expr("embedding").alias("qv"))
     cent = km.kmeans_fit(base, k=_KM_K, iters=_IVF_ITERS, d=_KM_D)
 
-    stage = tempfile.mkdtemp(prefix="ivf_src_")
-    os.symlink(f"{sf_dir}/embeddings.parquet", f"{stage}/embeddings.parquet")
+    stage = stage_table(sf_dir, "embeddings")
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>, label int"
     ).parquet(stage)
@@ -2988,7 +2966,6 @@ def q_ann_ivf_two_level_streaming_ingest(
     fine training, and the final fine assignment in SQL
     (two_level_cte_sql's fb{_TL_TF + 1}) with no streaming machinery
     — the batch/stream symmetry contract."""
-    import os
     import shutil
     import tempfile
 
@@ -2999,8 +2976,7 @@ def q_ann_ivf_two_level_streaming_ingest(
         d=_KM_D,
     )
 
-    stage = tempfile.mkdtemp(prefix="ivf2_src_")
-    os.symlink(f"{sf_dir}/embeddings.parquet", f"{stage}/embeddings.parquet")
+    stage = stage_table(sf_dir, "embeddings")
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>, label int"
     ).parquet(stage)
@@ -3588,7 +3564,6 @@ def q_ann_ivfadc_two_level_streaming_encode(
     chain, and encoding entirely in SQL; assignment and codes are
     per-row deterministic under the frozen artifacts, so any stream
     chop lands on the same index."""
-    import os
     import shutil
     import tempfile
 
@@ -3640,8 +3615,7 @@ def q_ann_ivfadc_two_level_streaming_encode(
         n_groups=_PQ_M,
     )
 
-    stage = tempfile.mkdtemp(prefix="ivfadc2_src_")
-    os.symlink(f"{sf_dir}/embeddings.parquet", f"{stage}/embeddings.parquet")
+    stage = stage_table(sf_dir, "embeddings")
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>, label int"
     ).parquet(stage)

@@ -25,6 +25,13 @@ from flight_delay_prediction_using_pyspark_spark.streaming import ops as S
 
 _dedup_run = itertools.count()
 
+#: The events columns as the stream readers declare them: `ts` is read
+#: as the raw µs integer, converted with timestamp_micros where needed.
+_EVENTS_SCHEMA = (
+    "event_id long, ts long, user_id long, event_type string, "
+    "value double, props string"
+)
+
 
 from contextlib import contextmanager
 
@@ -155,15 +162,9 @@ def q_events_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch emits MIN(event_id) per (user_id, hash), so the batch
     GROUP BY oracle is exact — the stateful operator itself is under
     the correctness gate, not just its batch shadow."""
-    # FileStreamSource requires a directory; stage the single parquet
-    # file behind a symlink (no copy).
-    stage = tempfile.mkdtemp(prefix="stream_dedup_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select(
             "event_id",
@@ -200,13 +201,9 @@ def q_events_streaming_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation is exact integer-valued-double arithmetic — immune to
     float summation order — and the batch GROUP BY oracle matches
     bit-for-bit."""
-    stage = tempfile.mkdtemp(prefix="stream_totals_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select(
             "user_id",
@@ -239,13 +236,9 @@ def q_events_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, so the final target is batching-independent and the
     batch QUALIFY-latest oracle is exact. On Delta/Iceberg the batch
     body becomes MERGE INTO with identical semantics."""
-    stage = tempfile.mkdtemp(prefix="cdc_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select("user_id", "event_id", "event_type")
     )
@@ -287,21 +280,16 @@ def q_events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ; reading it through the explicit `ts long` stream
     schema yields the raw µs integer, so `timestamp_micros(ts)` is the
     exact (lossless) conversion."""
-    stage = tempfile.mkdtemp(prefix="stream_ssj_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    schema = (
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string"
-    )
+    stage = S.stage_table(sf_dir, "events")
     to_ts = F.expr("timestamp_micros(ts)")
     clicks = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .filter(F.col("event_type") == "click")
         .select("user_id", to_ts.alias("click_ts"))
     )
     purchases = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .filter(F.col("event_type") == "purchase")
         .select(
@@ -347,13 +335,9 @@ def q_events_streaming_dedup_builtin(spark: SparkSession, sf_dir: str) -> DataFr
     `events_streaming_dedup`, whose per-key state lives forever).
     Emitting ONLY the key columns makes the surviving set equal to
     the batch DISTINCT — batching-independent and oracle-exact."""
-    stage = tempfile.mkdtemp(prefix="stream_dedup_wm_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select(
             "user_id",
@@ -416,15 +400,10 @@ def q_events_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame
     sentinels' own sessions never time out and are never emitted.
     The batch gaps-and-islands oracle is exact because session
     boundaries and integer-cent sums are order-immune."""
-    stage = tempfile.mkdtemp(prefix="stream_sess_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    schema = (
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string"
-    )
+    stage = S.stage_table(sf_dir, "events")
     max_ts = (
-        spark.read.schema(schema)
-        .parquet(f"{stage}/events.parquet")
+        spark.read.schema(_EVENTS_SCHEMA)
+        .parquet(stage)
         .agg(F.max("ts"))
         .first()[0]
     )
@@ -461,7 +440,7 @@ def q_events_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame
         mtime = _time.time() + i  # after the (old) events.parquet mtime
         os.utime(path, (mtime, mtime))
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{stage}/*")
         .select(
@@ -530,13 +509,9 @@ def q_events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tier"),
         )
     )
-    stage = tempfile.mkdtemp(prefix="stream_static_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select("user_id", cents.alias("cents"))
         .join(tiers, "user_id")
@@ -582,13 +557,9 @@ def q_events_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flight_delay_prediction_using_pyspark_spark.operators import sketches as SK
 
     ensure_utc(spark)
-    stage = tempfile.mkdtemp(prefix="stream_cms_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select(F.col("event_type").alias("token"))
     )
@@ -644,13 +615,9 @@ def q_events_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_manifest_sink_*). The aggregate of
     the round-tripped table matches the batch oracle exactly."""
     ensure_utc(spark)
-    stage = tempfile.mkdtemp(prefix="stream_eos_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select(
             "event_type",
@@ -696,13 +663,9 @@ def q_events_cdc_merge_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     op wins. The oracle QUALIFYs the same latest-change rule over the
     batch table and drops keys ending in a delete; a hash match proves
     upserts, deletes, and their interleavings all landed exactly."""
-    stage = tempfile.mkdtemp(prefix="cdc_del_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
+    stage = S.stage_table(sf_dir, "events")
     stream = (
-        spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .parquet(stage)
         .select(
             "user_id",

@@ -285,9 +285,9 @@ def q_dedup_exact_hash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_ctes(threshold: float, source: str = "documents") -> str:
     k, bands, rows = TD.MINHASH_K, TD.LSH_BANDS, TD.LSH_ROWS
-    # Mirrors dedup.minhash_signature: one md5 per shingle (the hs
+    # Mirrors dedup.minhash_sig_from_hashes: one md5 per shingle (the hs
     # column), k Carter-Wegman variants (A[i]*(h mod P) + B[i]) % P
-    # over it (round-7 family fix — see dedup.py MINHASH_P notes).
+    # over it (see dedup.py MINHASH_P notes).
     sig_exprs = ", ".join(
         f"list_min(list_transform(hs, h -> ((h % {TD.MINHASH_P}) * {TD.MINHASH_A[i]} "
         f"+ {TD.MINHASH_B[i]}) % {TD.MINHASH_P}))"

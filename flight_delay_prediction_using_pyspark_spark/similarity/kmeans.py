@@ -3,12 +3,10 @@ embeddings — the coarse/product quantizer trainer for IVF and PQ
 similarity search, built so a second SQL engine can replay every
 iteration bit-for-bit.
 
-Why a second k-means next to similarity/ivf.py (MLlib): MLlib's
-trainer accumulates float centroid sums whose value depends on
-reduction order and partitioning, so its centroids can't be pinned by
-the DuckDB oracle (the IVF catalog entry is rows-only for exactly that
-reason). This trainer removes every source of nondeterminism while
-keeping the distributed shape:
+Why not MLlib's KMeans: it accumulates float centroid sums whose
+value depends on reduction order and partitioning, so its centroids
+can't be pinned by the DuckDB oracle. This trainer removes every
+source of nondeterminism while keeping the distributed shape:
 
 - vector components quantized to BIGINT (``floor(x * scale)``) →
   per-cluster component sums are exact integer arithmetic —
@@ -40,8 +38,8 @@ Nothing data-sized ever reaches the driver.
 
 Used by (plans/similarity_queries.py):
 - ``embedding_kmeans_clusters`` — the trained state itself;
-- ``ann_ivf_kmeans_topk`` — IVF with an oracle-replayable coarse
-  quantizer (upgrades IVF from the rows-only MLlib gate);
+- ``ann_ivf_topk`` / ``ann_ivf_kmeans_topk`` — IVF with an
+  oracle-replayable coarse quantizer (3 and 2 probes);
 - ``ann_pq_adc_topk`` / ``ann_pq_recall_eval`` — product quantization
   (grouped k-means codebooks, ADC scoring) and its raw-vs-reranked
   recall audit;
@@ -72,17 +70,23 @@ DEFAULT_SCALE = 100_000
 # --- quantization -------------------------------------------------------------
 
 
-def quantize_expr(vec_col: str | Column, scale: int = DEFAULT_SCALE) -> Column:
-    """array<float|double> → array<bigint>: floor(x · scale).
+def quantize_sql_expr(vec_sql: str, scale: int = DEFAULT_SCALE) -> str:
+    """Spark-SQL text of array<float|double> → array<bigint>:
+    floor(x · scale), for composing into other SQL-text expressions.
 
     Exactness bound: |component| ≤ ~10 and corpora ≤ ~10^9 rows keep
     per-cluster component sums < 2^53 ≪ BIGINT, so group sums are
     exact and order-independent — the property the whole oracle
     contract rests on."""
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        col, lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long")
+    return (
+        f"transform({vec_sql}, x -> "
+        f"CAST(floor(CAST(x AS DOUBLE) * {repr(float(scale))}D) AS BIGINT))"
     )
+
+
+def quantize_expr(vec_col: str, scale: int = DEFAULT_SCALE) -> Column:
+    """quantize_sql_expr as a Column."""
+    return F.expr(quantize_sql_expr(vec_col, scale))
 
 
 def quantize_sql(vec_expr: str, scale: int = DEFAULT_SCALE) -> str:
@@ -93,36 +97,22 @@ def quantize_sql(vec_expr: str, scale: int = DEFAULT_SCALE) -> str:
     )
 
 
-def quantize_sql_expr(vec_sql: str, scale: int = DEFAULT_SCALE) -> str:
-    """Spark-SQL text twin of quantize_expr (same tree after parse),
-    for composing into other SQL-text expressions."""
-    return (
-        f"transform({vec_sql}, x -> "
-        f"CAST(floor(CAST(x AS DOUBLE) * {repr(float(scale))}D) AS BIGINT))"
-    )
-
-
 # --- distance + assignment expressions ----------------------------------------
 #
-# Literal-heavy expressions are built as SQL TEXT and parsed with ONE
-# F.expr call (round-13 optimization, guide §1/§4 "the Python
-# boundary" applied to the DRIVER): building the same tree through the
-# Column API costs one py4j round-trip per literal/operator — measured
-# 1.9-7.9 s per assignment expression at k=8·d=64 (and every Lloyd's
-# iteration builds a fresh one), vs ~3 ms for the parse of the
-# equivalent SQL string. The parsed tree is the SAME expression
-# (identical functions, literals, fold order), so results are
-# bit-identical — pinned by tests/test_similarity.py's
-# sql-vs-Column parity tests. Vector arguments are therefore SQL
-# expression TEXT (a column name or e.g. "slice(rq, 1, 8)"); the
-# public helpers also keep accepting a Column and fall back to the
-# (bit-identical, slower-to-build) Column path for compatibility.
+# Literal-heavy expressions are built as Spark SQL TEXT and parsed
+# with ONE F.expr call: building the same tree through the Column API
+# costs one py4j round-trip per literal/operator — measured 1.9-7.9 s
+# per assignment expression at k=8·d=64 (and every Lloyd's iteration
+# builds a fresh one), vs ~3 ms for the parse of the equivalent SQL
+# string. Each Spark builder has a DuckDB twin (and the distance one a
+# py_* driver-side twin) with the same IEEE ops in the same order —
+# pinned by tests/test_similarity.py's twin-parity test.
 #
-# CONTRACT of the string arguments (round-13 ADVICE): a string is
-# interpolated UNQUOTED into the generated SQL, so it must be a plain
-# identifier or already-valid SQL expression text. A column name that
-# needs backtick quoting (reserved word, special characters) must be
-# passed pre-quoted ("`my col`") or as a Column.
+# CONTRACT of the vector/column arguments: they are SQL expression
+# TEXT (a column name or e.g. "slice(rq, 1, 8)") interpolated UNQUOTED
+# into the generated SQL, so a column name that needs backtick quoting
+# (reserved word, special characters) must be passed pre-quoted
+# ("`my col`").
 
 
 def _dbl(x: float) -> str:
@@ -131,8 +121,7 @@ def _dbl(x: float) -> str:
     incl. denormals, -0.0, DBL_MAX), and the D suffix keeps Spark's
     parser from reading it as DECIMAL. Non-finite values would emit
     unparseable text ('nanD'/'infD') and surface as a cryptic parse
-    error deep inside a query — fail fast with context instead
-    (round-13 ADVICE)."""
+    error deep inside a query — fail fast with context instead."""
     x = float(x)
     if not math.isfinite(x):
         raise ValueError(
@@ -142,28 +131,21 @@ def _dbl(x: float) -> str:
     return repr(x) + "D"
 
 
-def _sq_dist_sql_expr(qv_sql: str, centroid: list[float]) -> str:
-    """SQL text of _sq_dist_expr's tree: Σ_j (double(qv_j) − c_j)² as
-    a left fold in array order — operand-order-identical to both
-    _sq_dist_expr and _sq_dist_sql."""
-    arr = "array(" + ",".join(_dbl(c) for c in centroid) + ")"
+def _array_sql(centroid: list[float]) -> str:
+    """Spark SQL array literal of exactly-round-tripping doubles."""
+    return "array(" + ",".join(_dbl(c) for c in centroid) + ")"
+
+
+def _sq_dist_sql_expr(qv_sql: str, c_sql: str) -> str:
+    """Spark SQL text of Σ_j (double(qv_j) − c_j)² as a left fold in
+    array order — operand-order-identical to _sq_dist_sql and
+    py_sq_dist. `c_sql` is the centroid as SQL text: an _array_sql
+    literal, or an array<double> column name (the join path)."""
     return (
-        f"aggregate(zip_with({qv_sql}, {arr}, (x, c) -> "
+        f"aggregate(zip_with({qv_sql}, {c_sql}, (x, c) -> "
         "(CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)), "
         "0.0D, (a, b) -> a + b)"
     )
-
-
-def _sq_dist_expr(qv_col: Column, centroid: list[float]) -> Column:
-    """Σ_j (double(qv_j) − c_j)² as a left fold in array order —
-    operand-order-identical to _sq_dist_sql."""
-    c_lit = F.array(*[F.lit(float(c)) for c in centroid])
-    diffs = F.zip_with(
-        qv_col,
-        c_lit,
-        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda a, b: a + b)
 
 
 def _sq_dist_sql(qv_expr: str, centroid_expr: str, d: int) -> str:
@@ -180,7 +162,7 @@ def _sq_dist_sql(qv_expr: str, centroid_expr: str, d: int) -> str:
 
 
 def py_sq_dist(q: list[int], c: list[float]) -> float:
-    """Driver-side twin of _sq_dist_expr/_sq_dist_sql: the SAME left
+    """Driver-side twin of _sq_dist_sql_expr/_sq_dist_sql: the SAME left
     fold (acc starts 0.0, terms in index order), so centroid-ranking
     decisions made on the driver (IVF probe lists, PQ LUTs) are
     bit-equal to what either engine would compute."""
@@ -198,12 +180,20 @@ def centroid_components(n: int, sums: list[int]) -> list[float]:
     return [s / n for s in sums]
 
 
+def _centroid_dist_sql_expr(
+    qv_sql: str, centroids: dict[int, tuple[int, list[int]]], cid: int
+) -> str:
+    return _sq_dist_sql_expr(
+        qv_sql, _array_sql(centroid_components(*centroids[cid]))
+    )
+
+
 def _nearest_sql_expr(
     qv_sql: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> str:
     """SQL text of nearest_expr's tree."""
     entries = ", ".join(
-        f"struct({_sq_dist_sql_expr(qv_sql, centroid_components(*centroids[cid]))}"
+        f"struct({_centroid_dist_sql_expr(qv_sql, centroids, cid)}"
         f" AS d, {int(cid)} AS c)"
         for cid in sorted(centroids)
     )
@@ -211,28 +201,15 @@ def _nearest_sql_expr(
 
 
 def nearest_expr(
-    qv_col: str | Column, centroids: dict[int, tuple[int, list[int]]]
+    qv_col: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> Column:
     """Argmin cluster id over inlined centroid literals: array_min of
     (dist, cid) structs — lexicographic struct ordering ≡ SQL
     ``ORDER BY dist, cid`` (ties → lowest cid). Each distance fold
     appears ONCE in the expression (a nested when-chain duplicates it
     O(k²) times — measured 5.8 MB task binaries at k=8·m=4 vs ~1.5 MB
-    this way). Pass the vector as SQL text (column name / expression)
-    to build via one F.expr parse; a Column takes the py4j path
-    (bit-identical, ~500x slower to construct)."""
-    if isinstance(qv_col, str):
-        return F.expr(_nearest_sql_expr(qv_col, centroids))
-    entries = [
-        F.struct(
-            _sq_dist_expr(qv_col, centroid_components(*centroids[cid])).alias(
-                "d"
-            ),
-            F.lit(cid).alias("c"),
-        )
-        for cid in sorted(centroids)
-    ]
-    return F.array_min(F.array(*entries))["c"]
+    this way)."""
+    return F.expr(_nearest_sql_expr(qv_col, centroids))
 
 
 # --- the trainer ---------------------------------------------------------------
@@ -300,26 +277,19 @@ def kmeans_fit_from_seeds(
 
 
 def inertia_expr(
-    qv_col: str | Column, centroids: dict[int, tuple[int, list[int]]]
+    qv_col: str, centroids: dict[int, tuple[int, list[int]]]
 ) -> Column:
     """floor of the min squared distance to any centroid — the
     per-row inertia contribution, floor-quantized to BIGINT so the
     corpus sum is exact and order-free (the double min is
     bit-identical both engines; only the cross-row SUM needs the
     integer armor)."""
-    if isinstance(qv_col, str):
-        ds = [
-            _sq_dist_sql_expr(qv_col, centroid_components(*centroids[cid]))
-            for cid in sorted(centroids)
-        ]
-        md = ds[0] if len(ds) == 1 else f"least({', '.join(ds)})"
-        return F.expr(f"CAST(floor({md}) AS BIGINT)")
-    dists = [
-        _sq_dist_expr(qv_col, centroid_components(*centroids[cid]))
+    ds = [
+        _centroid_dist_sql_expr(qv_col, centroids, cid)
         for cid in sorted(centroids)
     ]
-    md = dists[0] if len(dists) == 1 else F.least(*dists)
-    return F.floor(md).cast("long")
+    md = ds[0] if len(ds) == 1 else f"least({', '.join(ds)})"
+    return F.expr(f"CAST(floor({md}) AS BIGINT)")
 
 
 def inertia_sql(q_cte: str, cent_cte: str, d: int) -> str:
@@ -414,30 +384,19 @@ def grouped_fit_from_seeds(
 
 
 def _grouped_nearest_expr(
-    group_col: str | Column,
-    qv_col: str | Column,
+    group_col: str,
+    qv_col: str,
     per_group: dict[int, dict[int, tuple[int, list[int]]]],
 ) -> Column:
     """CASE over the group column, each branch the group's argmin —
-    one projection covers all m codebooks. String args build the CASE
-    as one parsed SQL expression (same tree as the F.when chain with
-    no otherwise: a missing group yields NULL either way)."""
-    if isinstance(group_col, str) and isinstance(qv_col, str):
-        whens = " ".join(
-            f"WHEN {group_col} = {int(g)} THEN"
-            f" {_nearest_sql_expr(qv_col, per_group[g])}"
-            for g in sorted(per_group)
-        )
-        return F.expr(f"CASE {whens} END")
-    expr = None
-    for g in sorted(per_group):
-        branch = nearest_expr(qv_col, per_group[g])
-        expr = (
-            F.when(group_col == F.lit(g), branch)
-            if expr is None
-            else expr.when(group_col == F.lit(g), branch)
-        )
-    return expr
+    one projection covers all m codebooks. No ELSE: a row of a group
+    without a codebook yields NULL."""
+    whens = " ".join(
+        f"WHEN {group_col} = {int(g)} THEN"
+        f" {_nearest_sql_expr(qv_col, per_group[g])}"
+        for g in sorted(per_group)
+    )
+    return F.expr(f"CASE {whens} END")
 
 
 # --- two-level (hierarchical) IVF: coarse cells, per-cell fine lists -----------
@@ -523,7 +482,7 @@ def two_level_assign_exprs(
     coarse: dict[int, tuple[int, list[int]]],
     books: dict[int, dict[int, tuple[int, list[int]]]],
     *,
-    qv_col: str | Column = "qv",
+    qv_col: str = "qv",
     coarse_out: str = "gid",
 ) -> tuple[Column, Column]:
     """The FULL-assignment (cells=None) expression pair of
@@ -532,7 +491,7 @@ def two_level_assign_exprs(
     against every batch frame: a Column is an unresolved expression
     tree, so one construction serves any number of frames, instead of
     re-paying the build per micro-batch (guide §4 — the Python/JVM
-    boundary applied to the driver, round-14). The fine CASE
+    boundary applied to the driver). The fine CASE
     references `coarse_out` BY NAME, so callers must apply the coarse
     column first (exactly what two_level_assign does). Same tree —
     including the bookless-cell raise of the frozen-ingest drift
@@ -580,7 +539,7 @@ def two_level_assign(
     in `coarse` (frozen-quantizer contract) but has NO entry in
     `books` — probing it must yield no fine lists, not a KeyError,
     mirroring the DuckDB oracle whose fine-seed CTE simply produces
-    no rows for an empty cell (round-10 ADVICE).
+    no rows for an empty cell.
 
     On the FULL-assignment path (cells=None — streaming ingest), a row
     whose winning coarse cell is bookless cannot be encoded under the
@@ -588,7 +547,7 @@ def two_level_assign(
     so the expression raises (task error → surfaced) instead of
     letting _grouped_nearest_expr's CASE fall through to a silent
     NULL fid, which partitionBy(gid, fid) would bury in the Hive
-    default partition (round-11 ADVICE)."""
+    default partition."""
     if cells is None and books:
         gid_col, fid_col = two_level_assign_exprs(
             coarse, books, qv_col=qv_col, coarse_out=coarse_out
@@ -610,8 +569,8 @@ def two_level_assign(
 
 
 def residual_expr(
-    qv_col: str | Column,
-    gid_col: str | Column,
+    qv_col: str,
+    gid_col: str,
     centroids: dict[int, tuple[int, list[int]]],
 ) -> Column:
     """Quantized residual w.r.t. the row's assigned coarse centroid:
@@ -621,31 +580,13 @@ def residual_expr(
     exact-integer contract (IVFADC, Jégou et al. TPAMI 2011 §V). CASE
     over the cell id, each branch a zip_with over that cell's inlined
     centroid — the same k·d literal budget as nearest_expr."""
-    if isinstance(qv_col, str) and isinstance(gid_col, str):
-        whens = []
-        for cid in sorted(centroids):
-            comp = centroid_components(*centroids[cid])
-            arr = "array(" + ",".join(_dbl(c) for c in comp) + ")"
-            whens.append(
-                f"WHEN {gid_col} = {int(cid)} THEN zip_with({qv_col}, {arr},"
-                " (x, c) -> CAST(floor(CAST(x AS DOUBLE) - c) AS BIGINT))"
-            )
-        return F.expr(f"CASE {' '.join(whens)} END")
-    expr = None
-    for cid in sorted(centroids):
-        comp = centroid_components(*centroids[cid])
-        c_lit = F.array(*[F.lit(float(c)) for c in comp])
-        branch = F.zip_with(
-            qv_col,
-            c_lit,
-            lambda x, c: F.floor(x.cast("double") - c).cast("long"),
-        )
-        expr = (
-            F.when(gid_col == F.lit(cid), branch)
-            if expr is None
-            else expr.when(gid_col == F.lit(cid), branch)
-        )
-    return expr
+    whens = " ".join(
+        f"WHEN {gid_col} = {int(cid)} THEN zip_with({qv_col},"
+        f" {_array_sql(centroid_components(*centroids[cid]))},"
+        " (x, c) -> CAST(floor(CAST(x AS DOUBLE) - c) AS BIGINT))"
+        for cid in sorted(centroids)
+    )
+    return F.expr(f"CASE {whens} END")
 
 
 def residual_sql(qv_expr: str, c_expr: str, d: int) -> str:
@@ -914,18 +855,11 @@ def _int_sq_dist_sql_expr(qv_sql: str, cand: list[int]) -> str:
     )
 
 
-def int_sq_dist_expr(qv_col: str | Column, cand: list[int]) -> Column:
+def int_sq_dist_expr(qv_col: str, cand: list[int]) -> Column:
     """Exact integer Σ(x_j−c_j)² between a quantized vector column and
     a quantized candidate POINT (k-means|| candidates are corpus rows,
     not means, so distances stay in BIGINT — no FP contract at all)."""
-    if isinstance(qv_col, str):
-        return F.expr(_int_sq_dist_sql_expr(qv_col, cand))
-    c_lit = F.array(*[F.lit(int(c)).cast("long") for c in cand])
-    return F.aggregate(
-        F.zip_with(qv_col, c_lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda a, b: a + b,
-    )
+    return F.expr(_int_sq_dist_sql_expr(qv_col, cand))
 
 
 def int_sq_dist_sql(a: str, b: str, d: int) -> str:
@@ -941,13 +875,14 @@ def int_sq_dist_sql(a: str, b: str, d: int) -> str:
 U32_DENOM = float(1 << 32)
 
 
-def u32_expr(id_col: str | Column) -> Column:
+def u32_expr(id_col: str) -> Column:
     """The repo's engine-portable hash-uniform as a 32-bit integer:
     conv(substr(md5(id), 1, 8), 16, 10) — bit-identical to DuckDB's
     CAST(concat('0x', substr(md5(id), 1, 8)) AS BIGINT)."""
-    col = F.col(id_col) if isinstance(id_col, str) else id_col
     return F.conv(
-        F.substring(F.md5(col.cast("string").cast("binary")), 1, 8), 16, 10
+        F.substring(F.md5(F.col(id_col).cast("string").cast("binary")), 1, 8),
+        16,
+        10,
     ).cast("long")
 
 
@@ -1102,18 +1037,6 @@ def kmeanspp_cte_sql(
 INLINE_CENTROID_DOUBLES_MAX = 8_192
 
 
-def _sq_dist_cols(qv_col: Column, c_col: Column) -> Column:
-    """Column-column twin of _sq_dist_expr (the centroid arrives as a
-    JOINED column, not a literal) — identical fold, identical IEEE
-    ops, so join-assignment is bit-equal to literal-assignment."""
-    diffs = F.zip_with(
-        qv_col,
-        c_col,
-        lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda a, b: a + b)
-
-
 def assign_via_join(
     df: DataFrame,
     centroids: dict[int, tuple[int, list[int]]],
@@ -1146,7 +1069,7 @@ def assign_via_join(
     centroids), so first() is deterministic in VALUE regardless of
     which candidate row wins, the shuffle key is one long instead of
     the full row, and non-groupable column types (MapType) ride
-    through fine (round-9 judge nit). PRECONDITION: `id_col` uniquely
+    through fine. PRECONDITION: `id_col` uniquely
     identifies df's rows — the contract every caller (vec_id) already
     satisfies.
 
@@ -1157,8 +1080,10 @@ def assign_via_join(
         for cid, (n, s) in sorted(centroids.items())
     ]
     cdf = spark.createDataFrame(rows, "__cid int, __c array<double>")
-    dist = _sq_dist_cols(F.col(qv_col), F.col("__c"))
-    best = F.min(F.struct(dist.alias("d"), F.col("__cid").alias("c")))
+    # the centroid arrives as a JOINED column, not a literal — the same
+    # fold builder, so join-assignment is bit-equal to literal-assignment
+    dist = _sq_dist_sql_expr(qv_col, "__c")
+    best = F.expr(f"min(struct({dist} AS d, __cid AS c))")
     carried = [F.first(c).alias(c) for c in df.columns if c != id_col]
     assigned = (
         df.crossJoin(F.broadcast(cdf))

@@ -19,6 +19,8 @@ long, event_type string, value double, props string(json).
 
 from __future__ import annotations
 
+import os
+import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -38,6 +40,23 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
+
+
+def stage_table(sf_dir: str, name: str) -> str:
+    """A new temp directory holding a symlink to every data file of the
+    `<sf_dir>/<name>.parquet` table, which is one file or a directory
+    of part files. A file stream source needs a directory and reads
+    the files directly in it, so a link to the table directory itself
+    would stream no rows. Callers may add more files (sentinels)."""
+    src = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    stage = tempfile.mkdtemp(prefix=f"stage_{name}_")
+    if not os.path.isdir(src):
+        os.symlink(src, os.path.join(stage, f"{name}.parquet"))
+        return stage
+    for f in sorted(os.listdir(src)):
+        if f.endswith(".parquet") and not f.startswith((".", "_")):
+            os.symlink(os.path.join(src, f), os.path.join(stage, f))
+    return stage
 
 
 def stream_events(spark: SparkSession, directory: str) -> DataFrame:

@@ -125,12 +125,12 @@ def winnowing_fingerprints(col: Column | str, k: int = 4, w: int = 5) -> Column:
 
     Shape notes: BOTH the token array and the k-gram hash array are
     let-bound via the single-element-array + transform trick (same as
-    minhash_signature) so Catalyst evaluates the regex tokenizer and
+    quality_score) so Catalyst evaluates the regex tokenizer and
     the O(n) md5 pass ONCE each — the gram builder references tokens
     three times (guard size, sequence bound, slice source) and the
     window picker references the hash array three ways, and
-    HOF-bearing projections get no codegen subexpression elimination
-    (round-12 plan audit). Documents with fewer than k tokens yield
+    HOF-bearing projections get no codegen subexpression elimination.
+    Documents with fewer than k tokens yield
     an empty array; documents with 1..w−1 grams yield the single
     minimum (one degenerate window), matching the reference
     algorithm. Pure JVM Column expression — no Python UDF, map-only
@@ -213,13 +213,6 @@ def stopword_ratio(col: Column | str, stopwords: Sequence[str] = STOPWORDS) -> C
     return F.when(F.size(toks) > 0, n_stop / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def mean_token_length(col: Column | str) -> Column:
-    """Average token length in characters."""
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def quality_score(
     col: Column | str,
     min_tokens: int = 10,
@@ -259,24 +252,13 @@ def quality_score(
     return F.element_at(F.transform(F.array(tokens(c)), build), 1)
 
 
-def token_2grams(col: Column | str) -> Column:
-    """Adjacent token 2-grams as `array<string>` ("a b", "b c", ...).
-    Built with an index-aware transform over a slice, so a document
-    with fewer than 2 tokens yields an empty array (never a
-    descending-`sequence` surprise). Map-only JVM expression. The
-    token array is LET-BOUND — the expression references it three
-    times (slice source, size bound, element_at lookup) and HOF
-    projections get no codegen subexpression elimination, so the
-    inline form re-ran the tokenizer 3x per document (round-12 plan
-    audit)."""
-
-    return F.element_at(F.transform(F.array(tokens(col)), token_2grams_from), 1)
-
-
 def token_2grams_from(t: Column) -> Column:
-    """token_2grams over an ALREADY-BOUND token array (a lambda
-    variable or materialized column) — the form composite expressions
-    use to share one tokenization across signals."""
+    """Adjacent token 2-grams as `array<string>` ("a b", "b c", ...)
+    over an ALREADY-BOUND token array (a lambda variable or
+    materialized column) — the form composite expressions use to share
+    one tokenization across signals. Built with an index-aware
+    transform over a slice, so fewer than 2 tokens yield an empty
+    array (never a descending-`sequence` surprise)."""
     head = F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0)))
     return F.transform(
         head,
@@ -335,8 +317,7 @@ def repetition_stats(col: Column | str) -> Column:
     1-element array) so the struct itself is also evaluated once per
     row — see q_doc_repetition_stats. Map-only at any scale."""
     # Nested binding: tokens run ONCE, the gram array is built from
-    # the bound tokens (round-12: struct(tokens, token_2grams) was
-    # two independent tokenizations).
+    # the bound tokens.
     bound = F.transform(
         F.array(tokens(col)),
         lambda t: F.struct(t.alias("t"), token_2grams_from(t).alias("g")),
@@ -363,20 +344,6 @@ def repetition_stats(col: Column | str) -> Column:
         )
 
     return F.element_at(F.transform(F.transform(bound, stats), with_flag), 1)
-
-
-def language_scores(col: Column | str, profiles: dict[str, Sequence[str]] | None = None) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the language-ID evidence)."""
-    profiles = profiles or LANG_PROFILES
-    toks = tokens(col)
-
-    def member_of(ws):  # closure factory: PySpark lambdas must be unary
-        return lambda t: t.isin(*ws)
-
-    return {
-        lang: F.size(F.filter(toks, member_of(words)))
-        for lang, words in profiles.items()
-    }
 
 
 def argmax_label(scores: dict[str, Column], default: str = "und") -> Column:
@@ -419,10 +386,10 @@ def predict_language(col: Column | str, profiles: dict[str, Sequence[str]] | Non
     order). Emits 'und' when no profile scores a single hit.
 
     The token array is LET-BOUND so the regex tokenizer runs once per
-    document instead of once per language profile (language_scores'
-    dict form builds an independent tokens() copy per language, and
-    HOF projections get no codegen subexpression elimination —
-    round-12 plan audit)."""
+    document instead of once per language profile (a per-language
+    score over tokens(col) would build an independent tokens() copy
+    per language, and HOF projections get no codegen subexpression
+    elimination)."""
     profiles = profiles or LANG_PROFILES
 
     def member_of(ws):  # closure factory: PySpark lambdas must be unary
@@ -612,7 +579,7 @@ def bigram_pairs_from_tokens(toks: Column) -> Column:
 
 def token_bigram_pairs(col: Column | str) -> Column:
     """Adjacent token pairs as `array<struct<w1,w2>>` — the join-ready
-    form of token_2grams (w1 is needed alone for the context-count
+    form of token_2grams_from (w1 is needed alone for the context-count
     join in the bigram LM). Slice-based, so <2-token docs yield an
     empty array without the descending-`sequence` trap. Map-only."""
     return bigram_pairs_from_tokens(tokens(col))

@@ -106,28 +106,6 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(tokens(col)), build), 1)
 
 
-def minhash_signature(shingle_col: Column, k: int = MINHASH_K) -> Column:
-    """k-minhash signature → array<long>; element i is
-    min over shingles of (A[i]*md5_32(shingle) + B[i]) mod P.
-
-    The base md5 array is let-bound via a transform over a
-    single-element wrapper array, so the digests run ONCE per shingle
-    no matter how many affine variants consume them — Catalyst's
-    CollapseProject would otherwise re-inline a "materialized"
-    projection into all k consumers (k× the digest cost)."""
-
-    def affine(i):  # closure factory: PySpark lambda arity must stay 1
-        return lambda h: ((h % MINHASH_P) * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P
-
-    def sig_from(base):  # base: lambda-bound array<long>, evaluated once
-        return F.array(
-            *[F.array_min(F.transform(base, affine(i))) for i in range(k)]
-        )
-
-    hashed_wrapped = F.array(F.transform(shingle_col, lambda s: md5_hash32(s)))
-    return F.element_at(F.transform(hashed_wrapped, sig_from), 1)
-
-
 def minhash_sig_from_hashes(hashes_col: Column, k: int = MINHASH_K) -> Column:
     """Signature from an already-materialized shingle-hash array —
     the k affine variants reference a plain column (cheap attribute

@@ -32,6 +32,20 @@ def test_triangle_stats_triangle_free(spark):
     assert row.n_wedges == 6
 
 
+def test_triangle_stats_empty_and_wedge_free(spark):
+    """The SQL oracle's values on degenerate graphs: with no edges,
+    n_edges is its COUNT(*) = 0 and n_wedges its SUM over no rows =
+    NULL; without a wedge the clustering coefficient is NULL (SQL's
+    x / 0), not an ANSI division error."""
+    row = G.triangle_stats(_edges(spark, [])).first()
+    assert (row.n_nodes, row.n_edges, row.n_triangles) == (0, 0, 0)
+    assert row.n_wedges is None
+    assert row.clustering is None
+    row = G.triangle_stats(_edges(spark, [(1, 2)])).first()
+    assert (row.n_nodes, row.n_edges, row.n_wedges, row.n_triangles) == (2, 1, 0, 0)
+    assert row.clustering is None
+
+
 def test_pagerank_mass_and_symmetry(spark):
     """On a symmetric graph total rank stays ≈ n·scale (integer floors
     lose at most a few units per node per iteration), and symmetric

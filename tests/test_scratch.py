@@ -1,6 +1,6 @@
-"""Scratch-persist lifecycle contracts (round-7 verdict item 6 +
-regression audit): thread-keyed release, the size gate, and the
-entry-hook release discipline."""
+"""Scratch-persist lifecycle contracts — thread-keyed release, the
+size gate, the entry-hook release discipline — and the failure
+contract of run_concurrently, whose worker threads re-home scratch."""
 
 from __future__ import annotations
 
@@ -62,3 +62,26 @@ def test_scratch_persist_if_large_skips_small_frames(spark):
     assert forced.storageLevel.useMemory
     Q.release_scratch()
     assert not forced.storageLevel.useMemory
+
+
+def test_run_concurrently_raises_earliest_failure_with_notes():
+    """Every thunk runs; the earliest-argument failure propagates and
+    each other failure rides along as a note, so none is dropped."""
+    import pytest
+
+    ran = []
+
+    def fail(exc):
+        def thunk():
+            raise exc
+
+        return thunk
+
+    first, second = ValueError("first"), KeyError("second")
+    with pytest.raises(ValueError) as info:
+        Q.run_concurrently(fail(first), lambda: ran.append("ok"), fail(second))
+    assert info.value is first
+    assert any(
+        "thunk #2" in n and "KeyError" in n for n in getattr(info.value, "__notes__", [])
+    )
+    assert ran == ["ok"]

@@ -64,21 +64,17 @@ def test_ivf_search_recall(spark):
     """IVF with n_probe = all lists must equal exact search; with a
     few probes it should still recover most of the exact top-k on the
     real embedding corpus."""
-    from flight_delay_prediction_using_pyspark_spark.similarity import ivf
+    from flight_delay_prediction_using_pyspark_spark.plans import similarity_queries as SQ
     from tests.conftest import SF_CORRECTNESS_DIR
 
     emb = spark.read.parquet(f"{SF_CORRECTNESS_DIR}/embeddings.parquet")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
-    centroids, assigned = ivf.build_ivf_index(emb, n_lists=8)
-    assigned = assigned.persist()
-    assert assigned.count() == emb.count()
-    assert len(centroids) == 8
 
     exact = [r.vec_id for r in ann.cosine_topk(emb, q, k=10).collect()]
-    full = [r.vec_id for r in ivf.ivf_search(assigned, centroids, q, k=10, n_probe=8).collect()]
+    full = [r.vec_id for r in SQ._ivf_topk(spark, SF_CORRECTNESS_DIR, n_probe=SQ._KM_K).collect()]
     assert full == exact  # probing every list == exact search
 
-    probed = {r.vec_id for r in ivf.ivf_search(assigned, centroids, q, k=10, n_probe=3).collect()}
+    probed = {r.vec_id for r in SQ._ivf_topk(spark, SF_CORRECTNESS_DIR, n_probe=3).collect()}
     assert len(probed & set(exact)) >= 5  # partial probe keeps recall
     assert 0 in probed  # query's own vector lives in its top centroid
 
@@ -277,9 +273,7 @@ def test_assignment_join_path_matches_literal_path(spark, km_rows):
     cent = km.kmeans_fit(df, k=6, iters=2, d=64)
     lit_path = {
         r["vec_id"]: r["cid"]
-        for r in df.withColumn(
-            "cid", km.nearest_expr(F.col("qv"), cent)
-        ).collect()
+        for r in df.withColumn("cid", km.nearest_expr("qv", cent)).collect()
     }
     join_path = {
         r["vec_id"]: r["cid"]
@@ -414,70 +408,116 @@ def test_two_level_ivfadc_scoring_plan_is_shuffle_free(spark):
     assert df.first()["vec_id"] == 0
 
 
-def test_sql_text_exprs_match_column_paths(spark, km_rows):
-    """Round-13 optimization: the literal-heavy assignment/residual/
-    inertia expressions are built as SQL text parsed by ONE F.expr
-    call (the Column API costs one py4j round-trip per literal —
-    seconds per Lloyd's iteration at k=8·d=64). The parsed tree must
-    be bit-identical to the Column-API tree on every helper: raw
-    distances (doubles compared exactly), argmin ids incl. ties,
-    grouped CASE, residuals, inertia, and the integer k-means||
-    distance."""
+def test_sql_text_exprs_match_duckdb_and_py_twins(spark, km_rows):
+    """Every Spark SQL-text builder in kmeans.py against its DuckDB or
+    driver-side py_* twin on the same rows: raw distances (doubles
+    compared exactly), argmin ids incl. ties, grouped CASE, residuals,
+    inertia, and the integer k-means|| distance."""
+    import math
+
+    import duckdb
+
     from flight_delay_prediction_using_pyspark_spark.similarity import kmeans as km
 
     df = spark.createDataFrame(km_rows, "vec_id long, qv array<long>")
     cent = km.kmeans_fit(df, k=5, iters=2, d=64)
-
-    # raw fold distances, compared as exact doubles
+    # plant an argmin tie: cid 5 duplicates cid 0, so it must never win
+    cent[5] = cent[0]
     comp = {c: km.centroid_components(*cent[c]) for c in cent}
-    d_col = df.select(
-        "vec_id",
-        *[km._sq_dist_expr(F.col("qv"), comp[c]).alias(f"d{c}") for c in cent],
-    ).collect()
-    d_sql = df.select(
-        "vec_id",
-        *[
-            F.expr(km._sq_dist_sql_expr("qv", comp[c])).alias(f"d{c}")
+    rows = dict(km_rows)
+
+    def py_nearest(qv, cents):
+        comps = {c: km.centroid_components(*cents[c]) for c in cents}
+        return min(sorted(cents), key=lambda c: (km.py_sq_dist(qv, comps[c]), c))
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE r (vid BIGINT, qv BIGINT[])")
+        con.executemany("INSERT INTO r VALUES (?, ?)", km_rows)
+        con.execute("CREATE TABLE c (cid INT, c DOUBLE[])")
+        con.executemany("INSERT INTO c VALUES (?, ?)", sorted(comp.items()))
+
+        # raw fold distances: Spark == DuckDB == py, as exact doubles
+        d_spark = {
+            (r["vec_id"], c): r[f"d{c}"]
+            for r in df.select(
+                "vec_id",
+                *[
+                    F.expr(
+                        km._sq_dist_sql_expr("qv", km._array_sql(comp[c]))
+                    ).alias(f"d{c}")
+                    for c in cent
+                ],
+            ).collect()
             for c in cent
-        ],
-    ).collect()
-    assert sorted(map(tuple, d_col)) == sorted(map(tuple, d_sql))
+        }
+        d_duck = {
+            (v, c): d
+            for v, c, d in con.execute(
+                f"SELECT r.vid, c.cid, {km._sq_dist_sql('r.qv', 'c.c', 64)}"
+                " FROM r CROSS JOIN c"
+            ).fetchall()
+        }
+        assert d_spark == d_duck
+        assert d_spark == {
+            (v, c): km.py_sq_dist(rows[v], comp[c]) for v, c in d_spark
+        }
 
-    # argmin (string arg -> SQL path, Column arg -> legacy path)
-    a_sql = {r["vec_id"]: r["cid"] for r in df.withColumn(
+        # residuals w.r.t. the assigned centroid
+        rdf = df.withColumn("gid", km.nearest_expr("qv", cent))
+        r_spark = {
+            r["vec_id"]: (r["gid"], r["rq"])
+            for r in rdf.withColumn(
+                "rq", km.residual_expr("qv", "gid", cent)
+            ).collect()
+        }
+        r_duck = {
+            (v, c): rq
+            for v, c, rq in con.execute(
+                f"SELECT r.vid, c.cid, {km.residual_sql('r.qv', 'c.c', 64)}"
+                " FROM r CROSS JOIN c"
+            ).fetchall()
+        }
+        for v, (g, rq) in r_spark.items():
+            assert rq == r_duck[(v, g)] == km.py_residual(rows[v], comp[g])
+
+        # exact-integer distance (k-means|| candidates)
+        cand = km_rows[0][1]
+        z_spark = {r["vec_id"]: r["d"] for r in df.select(
+            "vec_id", km.int_sq_dist_expr("qv", cand).alias("d")).collect()}
+        z_duck = dict(con.execute(
+            f"SELECT r.vid, {km.int_sq_dist_sql('r.qv', 'z.qv', 64)}"
+            f" FROM r CROSS JOIN (SELECT qv FROM r WHERE vid = {km_rows[0][0]}) z"
+        ).fetchall())
+        assert z_spark == z_duck
+        assert z_spark == {
+            v: sum((x - y) * (x - y) for x, y in zip(qv, cand))
+            for v, qv in rows.items()
+        }
+    finally:
+        con.close()
+
+    # argmin, ties to the lowest cid
+    a_spark = {r["vec_id"]: r["cid"] for r in df.withColumn(
         "cid", km.nearest_expr("qv", cent)).collect()}
-    a_col = {r["vec_id"]: r["cid"] for r in df.withColumn(
-        "cid", km.nearest_expr(F.col("qv"), cent)).collect()}
-    assert a_sql == a_col
+    assert a_spark == {v: py_nearest(qv, cent) for v, qv in rows.items()}
+    assert 5 not in a_spark.values() and 0 in a_spark.values()
 
-    # grouped CASE over a 2-group codebook
+    # grouped CASE over a 2-group codebook; a group without a codebook
+    # yields NULL
     pg = {0: cent, 1: {c: (n, [s + 1 for s in ss]) for c, (n, ss) in cent.items()}}
-    gdf = df.withColumn("g", (F.col("vec_id") % 2).cast("int"))
-    g_sql = {r["vec_id"]: r["cid"] for r in gdf.withColumn(
+    gdf = df.withColumn("g", (F.col("vec_id") % 3).cast("int"))
+    g_spark = {r["vec_id"]: r["cid"] for r in gdf.withColumn(
         "cid", km._grouped_nearest_expr("g", "qv", pg)).collect()}
-    g_col = {r["vec_id"]: r["cid"] for r in gdf.withColumn(
-        "cid", km._grouped_nearest_expr(F.col("g"), F.col("qv"), pg)).collect()}
-    assert g_sql == g_col
-
-    # residuals w.r.t. the assigned centroid
-    rdf = df.withColumn("gid", km.nearest_expr("qv", cent))
-    r_sql = {r["vec_id"]: r["rq"] for r in rdf.withColumn(
-        "rq", km.residual_expr("qv", "gid", cent)).collect()}
-    r_col = {r["vec_id"]: r["rq"] for r in rdf.withColumn(
-        "rq", km.residual_expr(F.col("qv"), F.col("gid"), cent)).collect()}
-    assert r_sql == r_col
+    assert g_spark == {
+        v: (py_nearest(qv, pg[v % 3]) if v % 3 in pg else None)
+        for v, qv in rows.items()
+    }
 
     # inertia (floor-quantized min distance)
-    i_sql = [r["md"] for r in df.select(
-        km.inertia_expr("qv", cent).alias("md")).collect()]
-    i_col = [r["md"] for r in df.select(
-        km.inertia_expr(F.col("qv"), cent).alias("md")).collect()]
-    assert sorted(i_sql) == sorted(i_col)
-
-    # exact-integer distance (k-means|| candidates)
-    cand = km_rows[0][1]
-    z_sql = [r["d"] for r in df.select(
-        km.int_sq_dist_expr("qv", cand).alias("d")).collect()]
-    z_col = [r["d"] for r in df.select(
-        km.int_sq_dist_expr(F.col("qv"), cand).alias("d")).collect()]
-    assert z_sql == z_col
+    i_spark = {r["vec_id"]: r["md"] for r in df.select(
+        "vec_id", km.inertia_expr("qv", cent).alias("md")).collect()}
+    assert i_spark == {
+        v: math.floor(min(km.py_sq_dist(qv, comp[c]) for c in cent))
+        for v, qv in rows.items()
+    }

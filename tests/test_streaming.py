@@ -645,3 +645,31 @@ def test_priority_sample_sink_crash_recovery(spark, tmp_path):
         assert got == truth, f"crash point {crash}: reservoir reset"
         assert not os.path.exists(f"{state}.old")
         assert not os.path.exists(f"{state}.tmp")
+
+
+def test_streaming_dedup_query_reads_every_file_of_a_directory_table(spark, tmp_path):
+    """The catalog's stream sources stage each data file of a table:
+    events written as a directory of 4 files streams the same answer
+    as the single-file table (a link to the directory streamed none)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from flight_delay_prediction_using_pyspark_spark.plans.queries import QUERIES
+    from tests.conftest import SF_CORRECTNESS_DIR
+
+    events = pq.read_table(f"{SF_CORRECTNESS_DIR}/events.parquet")
+    table_dir = tmp_path / "events.parquet"
+    os.makedirs(table_dir)
+    step = -(-events.num_rows // 4)
+    for i in range(4):
+        pq.write_table(
+            events.slice(i * step, step), str(table_dir / f"part-{i:05d}.parquet")
+        )
+    assert len(os.listdir(table_dir)) == 4
+
+    query = QUERIES["events_streaming_dedup"]
+    single = sorted(map(tuple, query(spark, SF_CORRECTNESS_DIR).collect()))
+    sharded = sorted(map(tuple, query(spark, str(tmp_path)).collect()))
+    assert len(single) > 0
+    assert sharded == single

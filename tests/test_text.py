@@ -556,15 +556,28 @@ def test_mg_candidates_superset_under_adversarial_partitioning(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE_DIR, "documents")
     shard_dir = str(tmp_path / "documents.parquet")
     docs.repartition(16).write.parquet(shard_dir)
-    sharded = spark.read.parquet(shard_dir)
-    assert sharded.rdd.getNumPartitions() >= 8  # the adversarial layout holds
+    # File packing aims for defaultParallelism splits, so on a host
+    # with fewer than 8 cores the 16 files would pack into fewer scan
+    # partitions; pin the split floor for this read and for the
+    # query's own load_table of the same directory.
+    conf = "spark.sql.files.minPartitionNum"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "16")
+    try:
+        sharded = spark.read.parquet(shard_dir)
+        assert sharded.rdd.getNumPartitions() >= 8  # the adversarial layout holds
 
-    got = {
-        (r.tok, r.freq)
-        for r in QUERIES["doc_token_mg_heavy_hitters"](
-            spark, str(tmp_path)
-        ).collect()
-    }
+        got = {
+            (r.tok, r.freq)
+            for r in QUERIES["doc_token_mg_heavy_hitters"](
+                spark, str(tmp_path)
+            ).collect()
+        }
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
     toks = docs.select(
         F.explode(TA.tokens(F.col("text"))).alias("tok")
     )
